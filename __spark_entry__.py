@@ -781,11 +781,11 @@ def q_cell_counts_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/salting.py) — the skew mitigation for heavy-tailed
     geo keys, value-checked against a plain GROUP BY oracle (salting
     is algebraically invisible for associative aggregates)."""
-    from geo_inference_spark.operators.geocode import hex_cell_sql
+    from geo_inference_spark.operators.geocode import hex_cell_udf
     from geo_inference_spark.operators.salting import salted_agg
 
     docs = _docs_with_latlon(spark, sf_dir).select(
-        F.expr(hex_cell_sql(5)).alias("cell")
+        hex_cell_udf(5)(F.col("lat"), F.col("lon")).alias("cell")
     )
     out = salted_agg(docs, ["cell"], {"n_pages": ("*", "count")}, n=16)
     return (
@@ -818,11 +818,11 @@ def q_cell_topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials instead of one straggler task. Salting is algebraically
     invisible (top-k is associative), so the oracle is a plain
     QUALIFY window."""
-    from geo_inference_spark.operators.geocode import hex_cell_sql
+    from geo_inference_spark.operators.geocode import hex_cell_udf
     from geo_inference_spark.operators.salting import salted_topk
 
     docs = _docs_with_latlon(spark, sf_dir).select(
-        F.expr(hex_cell_sql(0)).alias("cell"),
+        hex_cell_udf(0)(F.col("lat"), F.col("lon")).alias("cell"),
         "doc_id",
         F.length("text").cast("long").alias("text_len"),
     )
@@ -857,18 +857,12 @@ def _cell_topk_salted_oracle() -> str:
 
 def q_geocode_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-res hex geocode surface: distinct cell counts at res 7-10
-    over the documents table, computed by the pure whole-stage-codegen
-    SQL geocode (hex_cell_sql) — the DuckDB twin is the same
-    expression in the duck dialect, bit-identical per cell id. (S2
-    level-12 geocode stays pytest-pinned: its Hilbert-curve math has
-    no SQL twin; see tests/test_grid.py.)
-
-    Spark side uses the Arrow UDF geocode: bit-parity with
-    hex_cell_sql is property-pinned (tests/test_grid.py), the four
-    resolutions fuse into ONE ArrowEvalPython pass, and the UDF is
-    measured ~8x faster than four independent SQL expression trees
-    (pip_join.py measurement; VERDICT r4 flagged the 4-tree variant
-    as the round's one perf regression, 0.98 -> 2.11 s)."""
+    over the documents table. Spark geocodes with the JVM expression
+    hex_cell_udf (one projection for all four resolutions); the DuckDB
+    twin is hex_cell_sql, the same float64 math, bit-identical per
+    cell id (parity pinned in tests/test_grid.py). (S2 level-12
+    geocode stays pytest-pinned: its Hilbert-curve math has no SQL
+    twin; see tests/test_grid.py.)"""
     from geo_inference_spark.operators.geocode import hex_cell_udf
 
     docs = _docs_with_latlon(spark, sf_dir)

@@ -5,7 +5,8 @@ A from-scratch re-expression of the capabilities of NRCan/geo-inference
 the Spark DataFrame API:
 
 - cell indexing (S2 per the public spec; hex grid as the H3-shaped
-  fallback when the `h3` package is absent) via vectorized Arrow UDFs,
+  fallback when the `h3` package is absent), with the Spark hex
+  geocode as one whole-stage-codegen JVM expression,
 - broadcast point-in-polygon joins with per-partition bbox R-trees,
 - kNN by k-ring expansion with distance-bounded refinement,
 - the reference's raster->vector stage (tile grid, Hann-overlap

@@ -1,84 +1,80 @@
-"""Geocoding: (lat, lon) -> hierarchical cell ids, as Arrow UDFs.
+"""Geocoding: (lat, lon) -> hexgrid cell ids, as one JVM expression.
 
-North-star stage (a): "geocodes pages into H3 (res 7-10) / S2 cells
-via vectorized Arrow UDFs" (BASELINE.json). The UDFs are pandas_udf
-(Arrow-batched, no per-row Python); the cell math itself is the pure
-numpy in grid/hexgrid.py and grid/s2.py.
+North-star stage (a): pages are geocoded into hex cells (res 7-10).
+There is one geocode path on Spark, ``hex_cell_udf``: a Column
+expression that mirrors grid/hexgrid.py's numpy math operator for
+operator, so it runs in whole-stage codegen with no Python worker.
+``hex_cell_sql`` is the same math as a DuckDB SQL string — the
+oracle twin used by the `__spark_entry__` queries.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
-from ..grid import hexgrid, s2
+from ..grid import hexgrid
 
 
 def hex_cell_udf(res: int):
-    @F.pandas_udf(LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            hexgrid.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), res)
-        )
+    """``hex_cell_udf(res)(lat_col, lon_col) -> Column`` of int64 cell
+    ids, bit-identical to ``hexgrid.latlng_to_cell(lat, lon, res)``.
 
-    return _udf
+    Despite the name this is a JVM expression, not a Python UDF. It
+    keeps numpy's float64 operation order (constants are double
+    literals), and ``F.rint`` is Java ``Math.rint`` — round-half-even,
+    the same as ``np.rint`` (pinned in tests/test_grid.py). A null,
+    NaN or infinite coordinate yields a null cell (``try_cast``), so a
+    bad row joins nothing instead of failing the job under ANSI mode.
+    """
+    s = F.lit(hexgrid.cell_size(res))
+    sqrt3_3 = F.lit(float(hexgrid.SQRT3 / 3.0))
+    two_thirds = F.lit(2.0 / 3.0)
+    head = F.lit(hexgrid._FLAG | (int(res) << hexgrid._RES_SHIFT))
+    off = hexgrid._OFF
 
+    def cell(lat: Column, lon: Column) -> Column:
+        # hexgrid._xy_to_axial_frac with x = lon, y = lat
+        qf = (sqrt3_3 * lon - lat / 3.0) / s
+        rf = (two_thirds * lat) / s
+        # hexgrid._cube_round. Its rz fix reads the fixed rx, but the
+        # two fixes exclude each other, so the unfixed rx is the same
+        # value and keeps the expression tree small
+        yf = -qf - rf
+        rx, ry, rz = F.rint(qf), F.rint(yf), F.rint(rf)
+        dx, dy, dz = F.abs(rx - qf), F.abs(ry - yf), F.abs(rz - rf)
+        fix_x = (dx > dy) & (dx > dz)
+        q = F.when(fix_x, -ry - rz).otherwise(rx)
+        r = F.when(~fix_x & (dz > dy), -rx - ry).otherwise(rz)
+        # hexgrid.pack
+        q_bits = F.shiftleft(q.try_cast("long") + off, 28)
+        return head.bitwiseOR(q_bits).bitwiseOR(r.try_cast("long") + off)
 
-def hex_cells_udf(res_list):
-    """Cells at SEVERAL resolutions in one Arrow eval: array<long> of
-    len(res_list) cells per point, in res_list order. One python
-    roundtrip instead of one per resolution — the multi-res cover
-    join geocodes every point for all its resolutions in a single
-    eval node (see pip_join)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType
-
-    rs = [int(r) for r in res_list]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        arr = np.stack(
-            [hexgrid.latlng_to_cell(la, lo, r) for r in rs], axis=1
-        )
-        return pd.Series(list(arr))
-
-    return _udf
+    return cell
 
 
 def hex_cell_sql(
     res: int, lat_col: str = "lat", lon_col: str = "lon",
-    dialect: str = "spark",
+    dialect: str = "duck",
 ) -> str:
-    """The hexgrid geocode as a pure SQL expression — the
-    whole-stage-codegen fast path in Spark (no Python worker in the
-    PIP join) AND, with dialect='duck', the DuckDB oracle twin.
-
-    Bit-identical to hexgrid.latlng_to_cell: same float64 operation
-    order; Spark ``bround`` == DuckDB ``round_even(x, 0)`` == numpy
-    rint (round-half-even). Parity is property-tested over millions of
-    points (tests/test_grid.py).
+    """The hexgrid geocode as a DuckDB SQL expression — the oracle
+    twin of ``hex_cell_udf``, bit-identical to
+    hexgrid.latlng_to_cell: same float64 operation order, and DuckDB
+    ``round_even(x, 0)`` == numpy rint (round-half-even).
     """
-    # NB: bare decimal literals are DECIMAL in Spark SQL — the string
-    # cast keeps constants exact float64 so results are bit-identical
-    # to the numpy path
-    if dialect == "spark":
-        rnd = "bround({x})"
-        shl = "shiftleft({x}, {n})"
-        flag_lit = f"{1 << 62}L"
-    else:
-        rnd = "round_even({x}, 0)"
-        shl = "(({x}) << {n})"
-        flag_lit = f"{1 << 62}"
+    if dialect != "duck":
+        raise ValueError(
+            "hex_cell_sql builds the DuckDB twin only; "
+            "geocode on Spark with hex_cell_udf"
+        )
+    # string casts keep the constants exact float64
     s = f"cast('{hexgrid.cell_size(res)!r}' as double)"
     sqrt3_3 = f"cast('{hexgrid.SQRT3 / 3.0!r}' as double)"
     two_thirds = f"cast('{2.0 / 3.0!r}' as double)"
     qf = f"(({sqrt3_3} * {lon_col} - {lat_col} / 3.0) / {s})"
     rf = f"(({two_thirds} * {lat_col}) / {s})"
     yf = f"(-{qf} - {rf})"
-    rx, ry, rz = (rnd.format(x=qf), rnd.format(x=yf), rnd.format(x=rf))
+    rx, ry, rz = (f"round_even({x}, 0)" for x in (qf, yf, rf))
     dx, dy, dz = f"abs({rx} - {qf})", f"abs({ry} - {yf})", f"abs({rz} - {rf})"
     fix_x = f"({dx} > {dy} and {dx} > {dz})"
     fix_z = f"(not {fix_x} and {dz} > {dy})"
@@ -90,41 +86,6 @@ def hex_cell_sql(
         " as bigint)"
     )
     off = 1 << 27
-    res_shift = shl.format(x=f"cast({res} as bigint)", n=56)
-    q_shift = shl.format(x=f"({q} + {off})", n=28)
-    return f"({flag_lit} | {res_shift} | {q_shift} | ({r} + {off}))"
-
-
-def hex_cell_col(res: int, lat_col: str = "lat", lon_col: str = "lon"):
-    return F.expr(hex_cell_sql(res, lat_col, lon_col))
-
-
-def s2_cell_udf(level: int):
-    @F.pandas_udf(LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(s2.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), level))
-
-    return _udf
-
-
-def with_cells(
-    df: DataFrame,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    hex_res: tuple[int, ...] = (7, 8, 9, 10),
-    s2_levels: tuple[int, ...] = (12,),
-) -> DataFrame:
-    """Add cell_h{r} and cell_s2_{l} columns.
-
-    One projection, no shuffle; Catalyst keeps it in the same stage as
-    the scan. Cheap enough to recompute rather than persist — at 100TB
-    you'd still store cell_h7 as an Iceberg partition column at write
-    time (SURVEY.md §4 "partition the table by cell prefix").
-    """
-    for r in hex_res:
-        df = df.withColumn(f"cell_h{r}", hex_cell_udf(r)(F.col(lat_col), F.col(lon_col)))
-    for lv in s2_levels:
-        df = df.withColumn(
-            f"cell_s2_{lv}", s2_cell_udf(lv)(F.col(lat_col), F.col(lon_col))
-        )
-    return df
+    res_shift = f"((cast({res} as bigint)) << 56)"
+    q_shift = f"((({q} + {off})) << 28)"
+    return f"({1 << 62} | {res_shift} | {q_shift} | ({r} + {off}))"

@@ -154,17 +154,11 @@ def knn_join(
     """
     s = hexgrid.cell_size(res)
     # persist the geocoded projection: every escalation round (and the
-    # brute-force fallback) re-reads it, and without the persist each
-    # action re-runs the geocode UDF over the full table
+    # brute-force fallback) re-reads it instead of re-scanning
     pts = points.select(
         F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
         F.col(lon_col).alias("lon"),
     )
-    # single-file scans are one partition: spread the slim projection
-    # before the geocode UDF (conditional — no shuffle on real tables)
-    par = spark.sparkContext.defaultParallelism
-    if pts.rdd.getNumPartitions() < par:
-        pts = pts.repartition(par)
     pts = pts.withColumn(
         "cell", hex_cell_udf(res)(F.col("lat"), F.col("lon"))
     ).persist()
@@ -348,17 +342,16 @@ def radius_join(
         F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
         F.col(lon_col).alias("lon"),
     )
-    par = spark.sparkContext.defaultParallelism
-    if pts.rdd.getNumPartitions() < par:
-        pts = pts.repartition(par)
-    # coalesce = non-nullable key fence (see pip_join): stops the
-    # cover join's inferred isnotnull(cell) from materializing a
-    # second geocode ArrowEvalPython; the UDF never returns null
+    # coalesce = non-nullable join key. Otherwise the cover join's
+    # inferred isnotnull(cell) is pushed below the caller's lat/lon
+    # projections as a Filter that evaluates the whole geocode a second
+    # time with those projections inlined at every lat/lon reference
+    # (measured on 4 cores: geo_radius_count, whose coordinates are
+    # decimal expressions, went from 1.4 s to 2.1 s at sf0.1).
+    # 0 is never a cell id (bit 62 is set in all of them).
     pts = pts.withColumn(
         "cell",
-        F.coalesce(
-            hex_cell_udf(res)(F.col("lat"), F.col("lon")), F.lit(0)
-        ),
+        F.coalesce(hex_cell_udf(res)(F.col("lat"), F.col("lon")), F.lit(0)),
     )
     qmeta = spark.createDataFrame(
         queries[["qid", "lat", "lon"]], schema="qid long, lat double, lon double"

@@ -31,7 +31,7 @@ from pyspark.sql.types import BooleanType
 
 from ..geom.wkb import iter_polygons
 from ..grid import hexgrid
-from .geocode import hex_cell_udf, hex_cells_udf
+from .geocode import hex_cell_udf
 
 
 def build_cover(
@@ -182,8 +182,8 @@ def pip_join(
     if keep_cols is not None:
         pts = pts.select(*keep_cols, lat_col, lon_col)
     # single-file inputs arrive as ONE scan partition (the testdata
-    # parquet is one row group), which would run the geocode +
-    # refine UDF chain on one core. Conditional: a real table has
+    # parquet is one row group), which would run the Python refine
+    # UDF on one core. Conditional: a real table has
     # partitions >= slots and keeps the no-shuffle contract.
     par = spark.sparkContext.defaultParallelism
     if pts.rdd.getNumPartitions() < par:
@@ -192,53 +192,28 @@ def pip_join(
     res_list = sorted(int(r) for r in cover_pdf["res"].unique())
     if not res_list:
         return pts.limit(0).withColumn("area_id", F.lit(None).cast("long"))
-    # ONE scan, ONE geocode eval, ONE broadcast join for ALL cover
-    # resolutions. Cell ids embed their resolution (res bits << 56),
-    # so the per-res covers never collide and one union cover keyed
-    # by cell alone is exactly the per-res join union — the previous
-    # per-res union re-ran the full scan + a separate geocode python
-    # eval PER RESOLUTION (3 full passes over the pages table for a
-    # 3-res cover; steady-state 1.7 s -> 0.72 s at 300k pages, and at
-    # 100 TB the duplicate scans are the whole cost).
-    # Arrow-batched UDF geocode: measured faster end-to-end than
-    # the pure-SQL expression (hex_cell_sql) in this pipeline —
-    # re-measured round 4 at 30M rows/local[8]: UDF 7.7 s vs
-    # 61.5 s for the withColumn SQL-expr variant.
-    # coalesce = non-nullable key fence: the inner join otherwise
-    # infers isnotnull over the python-UDF key as a pre-join Filter
-    # that materializes a SECOND ArrowEvalPython geocoding every
-    # point (plan-verified); latlng_to_cell never returns null so
-    # the value is unchanged.
+    # ONE scan, ONE geocode projection, ONE broadcast join for ALL
+    # cover resolutions. Cell ids embed their resolution (res bits
+    # << 56), so the per-res covers never collide (pinned in
+    # tests/test_grid.py) and one union cover keyed by cell alone is
+    # exactly the per-res join union: each point explodes to one cell
+    # per cover resolution.
     cov_all = spark.createDataFrame(
         cover_pdf.drop(columns=["res"]),
         schema="cell long, area_id long, boundary boolean",
     )
-    if len(res_list) == 1:
-        pts_g = pts.withColumn(
-            "_cell",
-            F.coalesce(
-                hex_cell_udf(res_list[0])(F.col(lat_col), F.col(lon_col)),
-                F.lit(0),
-            ),
-        )
-    else:
-        multi = hex_cells_udf(res_list)
-        pts_g = pts.withColumn(
-            "_cell",
-            F.explode(
-                F.coalesce(
-                    multi(F.col(lat_col), F.col(lon_col)),
-                    F.array(*[F.lit(0)] * len(res_list)),
-                )
-            ),
-        )
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    pts_g = pts.withColumn(
+        "_cell",
+        F.explode(F.array(*[hex_cell_udf(r)(lat, lon) for r in res_list])),
+    )
     out = pts_g.join(
         F.broadcast(cov_all), on=pts_g["_cell"] == cov_all["cell"],
         how="inner",
     ).drop("cell")
     return out.filter(
         (~F.col("boundary"))
-        | refine(F.col(lon_col), F.col(lat_col), F.col("area_id"))
+        | refine(lon, lat, F.col("area_id"))
     ).drop("boundary", "_cell")
 
 
@@ -252,13 +227,14 @@ def pages_per_area(
 ) -> DataFrame:
     """The flagship aggregate: page count per admin area.
 
-    Plan: scan -> project -> geocode UDF -> BroadcastHashJoin ->
-    (partial hash agg map-side) -> single small shuffle on area_id.
+    Plan: scan -> project -> geocode expression -> BroadcastHashJoin
+    -> refine UDF -> (partial hash agg map-side) -> single small
+    shuffle on area_id.
 
-    keep_cols=() prunes to (lat, lon) BEFORE the UDF chain — without
-    it every html/text byte rides through Arrow into the Python
-    worker; with it the parquet scan reads two doubles per row
-    (ReadSchema shows only lat/lon).
+    keep_cols=() prunes to (lat, lon) BEFORE the join — without it
+    every html/text byte rides along to the refine; with it the
+    parquet scan reads two doubles per row (ReadSchema shows only
+    lat/lon).
     """
     j = pip_join(
         spark, points, polygons_pdf, res, lat_col, lon_col, keep_cols=()

@@ -2,7 +2,7 @@
 
 readStream -> (stateless geocode / extract) -> watermarked windowed
 aggregation -> sink. Stateless stages are the SAME functions the
-batch engine uses (geocode UDF, text expressions); only the
+batch engine uses (the geocode and text JVM expressions); only the
 aggregation differs (event-time window + watermark instead of a
 plain groupBy), which is exactly Structured Streaming's contract.
 """

@@ -40,7 +40,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = "") -> int:
 
     # sf-dependent oracles (IVF centroid training) follow the gate's sf
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=16)
+    # cores follow $SPARK_GRAFT_CPUS (get_spark's default); the
+    # shuffle width stays fixed so results do not depend on the host
+    spark = get_spark("oracle-check", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -108,3 +108,79 @@ def test_children_partition_property():
     # aperture-7 grid: ~7 children on average
     assert 5.5 <= np.mean(counts) <= 8.5, np.mean(counts)
     assert (hg.grid_disk(cells[:3], 2) == hg.k_ring(cells[:3], 2)).all()
+
+
+def _geocode_probe_points():
+    """Random points, the vertices and edge midpoints of real cells
+    (where cube rounding ties), and the +-90/+-180 corners."""
+    rng = np.random.RandomState(11)
+    lat = rng.uniform(-90, 90, 4000)
+    lng = rng.uniform(-180, 180, 4000)
+    lats, lngs = [lat], [lng]
+    for res in (0, 3, 7, 10, 15):
+        b = hexgrid.cell_boundary(hexgrid.latlng_to_cell(lat[:300], lng[:300], res))
+        lngs += [b[:, :6, 0].ravel(), ((b[:, :6, 0] + b[:, 1:, 0]) / 2).ravel()]
+        lats += [b[:, :6, 1].ravel(), ((b[:, :6, 1] + b[:, 1:, 1]) / 2).ravel()]
+    corners = [(a, o) for a in (-90.0, 0.0, 90.0) for o in (-180.0, 0.0, 180.0)]
+    lats.append(np.array([c[0] for c in corners]))
+    lngs.append(np.array([c[1] for c in corners]))
+    return np.concatenate(lats), np.concatenate(lngs)
+
+
+def test_spark_geocode_expression_bit_identical(spark):
+    """hex_cell_udf (the JVM expression every Spark caller uses) ==
+    hexgrid.latlng_to_cell, bit for bit, at every resolution."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from geo_inference_spark.operators.geocode import hex_cell_udf
+
+    lat, lng = _geocode_probe_points()
+    df = spark.createDataFrame(pd.DataFrame({"lat": lat, "lon": lng}))
+    got = df.select(*[
+        hex_cell_udf(r)(F.col("lat"), F.col("lon")).alias(f"c{r}")
+        for r in range(hexgrid.MAX_RES + 1)
+    ]).toPandas()
+    for r in range(hexgrid.MAX_RES + 1):
+        exp = hexgrid.latlng_to_cell(lat, lng, r)
+        np.testing.assert_array_equal(got[f"c{r}"].to_numpy(np.int64), exp)
+
+
+def test_spark_geocode_bad_coordinates_are_null(spark):
+    """A null, NaN or infinite coordinate geocodes to a null cell (it
+    joins nothing) instead of failing the job on an ANSI cast."""
+    from pyspark.sql import functions as F
+
+    from geo_inference_spark.operators.geocode import hex_cell_udf
+
+    rows = [(None, 1.0), (float("nan"), 1.0), (1.0, float("inf")), (45.0, -73.0)]
+    df = spark.createDataFrame(rows, "lat double, lon double")
+    got = [r[0] for r in df.select(
+        hex_cell_udf(8)(F.col("lat"), F.col("lon"))).collect()]
+    assert got[:3] == [None, None, None]
+    assert got[3] == int(hexgrid.latlng_to_cell(45.0, -73.0, 8))
+
+
+def test_spark_rint_is_numpy_rint_on_halves(spark):
+    """F.rint (Java Math.rint) rounds exact .5 halves to even, as
+    np.rint does — the tie rule the geocode parity rests on."""
+    from pyspark.sql import functions as F
+
+    halves = [k + 0.5 for k in range(-6, 6)] + [2.0 ** 51 + 0.5, -(2.0 ** 51) - 0.5]
+    df = spark.createDataFrame([(v,) for v in halves], "x double")
+    got = [r[0] for r in df.select(F.rint("x")).collect()]
+    assert got == np.rint(np.array(halves)).tolist()
+
+
+def test_cells_embed_resolution_and_never_collide_across_res():
+    """Cell ids carry their resolution, so cells at r1 != r2 are never
+    equal — the multi-res pip_join keys ONE broadcast cover by cell."""
+    lat, lng = _geocode_probe_points()
+    by_res = {}
+    for r in range(hexgrid.MAX_RES + 1):
+        c = hexgrid.latlng_to_cell(lat, lng, r)
+        assert (hexgrid.unpack(c)[0] == r).all()
+        by_res[r] = set(c.tolist())
+    for r1 in by_res:
+        for r2 in range(r1 + 1, hexgrid.MAX_RES + 1):
+            assert not by_res[r1] & by_res[r2], (r1, r2)

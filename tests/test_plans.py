@@ -2,6 +2,7 @@
 relies on must be visible in `explain`, not just hoped for:
 
 * the PIP join broadcasts the cover (never shuffles the pages side),
+* the geocode is a JVM expression (no ArrowEvalPython of its own),
 * the parquet scan is pruned to (lat, lon) for the count-per-area
   pipeline,
 * the LSH bucket join is a real equi-join (hashable keys),
@@ -35,6 +36,48 @@ def test_pip_join_broadcasts_cover_and_prunes_scan(spark, tmp_path):
     for ln in scan_lines:
         assert "lat" in ln and "lon" in ln
         assert "html" not in ln and "text" not in ln and "url" not in ln
+
+
+def test_pages_per_area_one_python_eval_one_broadcast_join(spark, tmp_path):
+    """The geocode is a JVM expression: the only ArrowEvalPython is the
+    boundary refine, and a multi-res cover still plans ONE broadcast
+    join (one exploded cell per resolution)."""
+    from geo_inference_spark.operators.pip_join import build_cover
+
+    path = str(tmp_path / "pages")
+    pages_df(spark, 2000, partitions=4).write.parquet(path)
+    pq = spark.read.parquet(path)
+    for n_areas, n_res in ((16, 1), (64, 3)):
+        polys = synth_admin_polygons(n_areas)
+        assert build_cover(polys, 8)["res"].nunique() == n_res
+        plan = plan_of(pages_per_area(spark, pq, polys, res=8))
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count("BroadcastHashJoin") == 1, plan
+
+
+def test_knn_and_radius_geocode_has_no_python_eval(spark):
+    """kNN's persisted cell projection and the radius join's cover
+    join geocode on the JVM: no ArrowEvalPython in either plan, and
+    the radius join evaluates the geocode once."""
+    import pandas as pd
+
+    from geo_inference_spark.operators.knn import knn_join, radius_join
+
+    pages = pages_df(spark, 2000, partitions=4)
+    queries = pd.DataFrame(
+        {"qid": [0, 1], "lat": [-60.0, 40.7], "lon": [170.0, -74.0]}
+    )
+    sink: list = []
+    # max_rounds=0: the fallback plan reads the persisted projection
+    knn_join(spark, pages, queries, k=5, res=7, max_rounds=0, plan_sink=sink)
+    assert sink and "InMemoryRelation" in sink[0], sink
+    assert sink[0].count("ArrowEvalPython") == 0, sink[0]
+    plan = plan_of(radius_join(spark, pages, queries, 50.0))
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+    # one geocode evaluation site: no inferred isnotnull(cell) Filter
+    # re-running it below the projection
+    assert plan.count("shiftleft(") == 1, plan
 
 
 def test_overlap_stitch_has_exactly_two_exchanges(spark):
@@ -148,7 +191,7 @@ def test_jaccard_intersect_not_in_join_condition(spark):
     broadcast join condition, where it was evaluated 3x per probed
     pair inside a generated method big enough that HotSpot
     intermittently refused to JIT it (the measured 5 s vs 20-56 s
-    bimodality, r6). The rand() fence makes the projection
+    bimodality, r6). The shuffle() fence makes the projection
     nondeterministic so the filter cannot be pushed through it; the
     intersect stays a single JVM expression (no Arrow ship of the
     per-pair array columns)."""
