@@ -1,8 +1,28 @@
 """SparkSession factory tuned for this engine.
 
 The reference parallelizes with a dask threaded scheduler sized to
-cores-1 (/root/reference/geo_inference/geo_inference.py:189-197); the
-Spark analogue is executor task slots + shuffle partitions, set here.
+cores-1 (geo_inference/geo_inference.py:189-197); the Spark analogue is
+executor task slots + shuffle partitions, set here.
+
+Python workers start from ``geo_inference_spark._worker_daemon``, not
+``pyspark.daemon``. PySpark 4.1's worker calls
+``importlib.invalidate_caches()`` on every task
+(``worker_util.setup_spark_files``). On CPython 3.10-3.12 that makes
+every live ``zipimporter`` (about 16: pyspark.zip and its subpackages,
+py4j, the Spark jar) re-parse its archive's central directory in pure
+Python: 0.25-0.5 s added to every Python task, even on a reused
+worker. The engine's daemon module stat-checks the archive and skips
+an unchanged re-read (measured on 4 cores: a 16-task trivial RDD stage
+1.3-1.5 s -> 0.4 s). It is set as ``spark.python.daemon.module``
+because ``pyspark.daemon`` ignores ``spark.python.worker.module``
+unless the name starts with ``pyspark``. On CPython >= 3.13, which
+reads the directory lazily, the module runs ``pyspark.daemon``
+unpatched. The daemon starts before a task's ``--py-files`` are on
+``sys.path``: the engine's root is put on the workers' ``PYTHONPATH``
+here (local mode), and a cluster that ships the engine with
+``spark-submit --py-files`` must also make the zip importable on the
+executors (e.g. ``spark.executorEnv.PYTHONPATH``) or keep the default
+daemon module.
 """
 
 from __future__ import annotations
@@ -10,6 +30,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -34,6 +56,12 @@ def get_spark(
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    # the daemon module is imported before any task adds the engine
+    # to sys.path: put its root on the workers' PYTHONPATH
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if _ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            [_ROOT] + [p for p in paths if p])
     if shuffle_partitions is None:
         # 2x task slots keeps all slots busy under AQE coalescing
         shuffle_partitions = max(2 * cores, 8)
@@ -76,6 +104,8 @@ def get_spark(
                 "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
             ),
         )
+        .config("spark.python.daemon.module",
+                "geo_inference_spark._worker_daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -100,7 +130,13 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     over the first queries of a fresh session). Both run on synthetic
     range data — no input table is touched and nothing is cached.
     Runs once per session; skip with SPARK_GRAFT_NO_WORKER_WARM=1
-    (e.g. for UDF-free jobs)."""
+    (e.g. for UDF-free jobs).
+
+    The ~6 s and the worker counts below were measured before the
+    engine's daemon module removed the 0.25-0.5 s zip re-read that
+    every Python task paid: part of what this warm-up appeared to
+    save was that per-task toll, and its worth has to be measured
+    again on top of the daemon module."""
     if os.environ.get("SPARK_GRAFT_NO_WORKER_WARM"):
         return
     if getattr(spark, "_graft_workers_warm", False):

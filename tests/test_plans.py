@@ -223,3 +223,21 @@ def test_srp_signature_runs_once(spark):
     # exactly two python stages: the signature over base rows and the
     # fused cosine over candidates
     assert plan.count("ArrowEvalPython") == 2, plan
+
+
+def test_ivf_assign_runs_once(spark):
+    """ivf_topk's list key is the assign UDF behind the coalesce fence:
+    the probe join's inferred isnotnull(list) must not add a second
+    ArrowEvalPython running the assign over every row."""
+    from geo_inference_spark.text.similarity import embedding_queries, ivf_topk
+
+    rng = np.random.RandomState(0)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(16).tolist()) for i in range(64)],
+        "vec_id long, embedding array<float>")
+    out = ivf_topk(spark, emb, embedding_queries(emb, n=4), k=5)
+    evals = [ln for ln in plan_of(out).splitlines() if "ArrowEvalPython" in ln]
+    # one eval per UDF: the assign over base rows, the fused cosine
+    # over candidates
+    assert sum("assign(" in ln for ln in evals) == 1, evals
+    assert len(evals) == 2, evals
